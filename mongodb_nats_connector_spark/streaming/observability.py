@@ -100,14 +100,12 @@ class ConnectorMetricsListener(StreamingQueryListener):
         batch_s = (p.batchDuration or 0) / 1000.0
         labels = {"collection": str(name)}
         self.registry.inc("connector_events_total", labels, rows)
-        if rows:
-            per_event = batch_s / rows
-            for _ in range(min(int(rows), 1)):  # one observation per batch
-                self.registry.observe(
-                    "connector_change_event_processing_duration_seconds",
-                    labels,
-                    per_event,
-                )
+        if rows:  # one observation per batch
+            self.registry.observe(
+                "connector_change_event_processing_duration_seconds",
+                labels,
+                batch_s / rows,
+            )
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass

@@ -14,6 +14,12 @@ are column expressions, and O9 is a `foreachBatch` idempotent sink
 (streaming/sink.py). Delivery semantics match the reference's crash matrix
 (README.md:118-127): at-least-once publish + msg-id dedup = effectively once.
 
+Each epoch is ONE Spark write. O6 rides it: the transform keeps the
+invalidate marker as a ``<STREAM>.invalidate`` row, the sink's write
+Observation counts it and filters it out before the write, and the batch
+handler reads ``sink.invalidated`` afterwards to stop that pipeline's query
+once the epoch has committed. There is no separate scan for the marker.
+
 Ordering: the reference is strictly ordered per collection because its loop
 is single-threaded (client.go:217-257). Here each micro-batch is sorted by
 resume token and written atomically per epoch; batch N+1 only commits after
@@ -47,9 +53,11 @@ def transform_change_events(
 ) -> DataFrame:
     """O4-O8: the whole per-event transform as one narrow projection.
 
-    Filter to publishable op types (O5; drop/rename/invalidate silently
-    dropped like client.go:231-237), derive the routing subject (O8), and
-    serialize the envelope to relaxed ExtJSON (O7). No shuffle — this is a
+    Filter to publishable op types (O5; drop/rename silently dropped like
+    client.go:231-237), derive the routing subject (O8), and serialize the
+    envelope to relaxed ExtJSON (O7). The invalidate marker (O6) is kept as a
+    ``<STREAM>.invalidate`` row so the sink can count it inside its one write
+    and drop it there; it is never published. No shuffle — this is a
     map-only stage at any scale. ``keep_document_key`` carries the document
     key through for the sink's per-key-ordered mode.
     """
@@ -64,13 +72,10 @@ def transform_change_events(
     if keep_document_key:
         cols.append(F.col("document_key_id").alias("document_key"))
     return events.filter(
-        F.col("operation_type").isin(*PUBLISHABLE_OPERATION_TYPES)
+        F.col("operation_type").isin(
+            *PUBLISHABLE_OPERATION_TYPES, INVALIDATE_OPERATION_TYPE
+        )
     ).select(*cols)
-
-
-def detect_invalidate(events: DataFrame) -> DataFrame:
-    """O6: invalidate markers terminate the stream (client.go:232-235)."""
-    return events.filter(F.col("operation_type") == INVALIDATE_OPERATION_TYPE)
 
 
 @dataclass
@@ -78,14 +83,14 @@ class PipelineHandle:
     config: CollectionConfig
     query: StreamingQuery
     sink: JetStreamLikeSink
-    # set by the batch handler when an invalidate marker is observed; the
-    # query is then stopped gracefully (reference client.go:232-235 returns
+    # holds the query for the batch handler, which stops it gracefully once
+    # the sink saw an invalidate marker (reference client.go:232-235 returns
     # from the watch loop without error — the connector stays alive)
     lifecycle: dict = field(default_factory=dict)
 
     @property
     def invalidated(self) -> bool:
-        return bool(self.lifecycle.get("invalidated"))
+        return self.sink.invalidated
 
 
 def _stop_after_epoch(query: StreamingQuery, timeout: float = 30.0) -> None:
@@ -144,17 +149,16 @@ class Connector:
 
     def _batch_handler(self, sink: JetStreamLikeSink, stream_name: str, lifecycle: dict):
         """foreachBatch body: publish the batch's publishable events, then —
-        O6 — if the batch carries an invalidate marker, flag the pipeline and
-        stop its query after the epoch (client.go:232-235: the reference
-        stops resuming the dropped collection; siblings keep running)."""
+        O6 — if the sink's write saw an invalidate marker, stop the query
+        after the epoch (client.go:232-235: the reference stops resuming the
+        dropped collection; siblings keep running)."""
 
         def handle(batch: DataFrame, epoch_id: int) -> None:
             out = transform_change_events(
                 batch, stream_name, keep_document_key=self.order_within_key
             )
             sink.publish_batch(out, epoch_id)
-            if not detect_invalidate(batch).isEmpty():
-                lifecycle["invalidated"] = True
+            if sink.invalidated:
                 query = lifecycle.get("query")
                 if query is not None:
                     threading.Thread(
@@ -187,7 +191,7 @@ class Connector:
                 .start()
             )
             lifecycle["query"] = query
-            if lifecycle.get("invalidated"):
+            if sink.invalidated:
                 # the first trigger raced us and already saw the invalidate
                 threading.Thread(
                     target=_stop_after_epoch, args=(query,), daemon=True

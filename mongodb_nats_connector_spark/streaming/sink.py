@@ -18,12 +18,18 @@ NATS consumer-side dedup window.
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from mongodb_nats_connector_spark.config import (
+    INVALIDATE_OPERATION_TYPE,
+    PUBLISHABLE_OPERATION_TYPES,
+)
 
 
 class JetStreamLikeSink:
@@ -56,6 +62,14 @@ class JetStreamLikeSink:
         self.order_within_key = order_within_key
         self.metrics = metrics
         self.messages_dir = os.path.join(stream_dir, "messages")
+        self._op_subjects = [
+            f"{stream_name}.{op}" for op in PUBLISHABLE_OPERATION_TYPES
+        ]
+        self._invalidate_subject = f"{stream_name}.{INVALIDATE_OPERATION_TYPE}"
+        self._publishable = ~F.col("subject").eqNullSafe(self._invalidate_subject)
+        # set once an epoch carried the invalidate marker (O6): the stream
+        # has ended and its pipeline should stop after that epoch
+        self.invalidated = False
 
     # O13 — idempotent DDL bootstrap (AddStream)
     def add_stream(self) -> None:
@@ -63,8 +77,14 @@ class JetStreamLikeSink:
 
     # O9 — publish with idempotency key; called per epoch by foreachBatch
     def publish_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
+        """Write the epoch as ONE Spark job. ``batch`` may still carry the
+        ``<STREAM>.invalidate`` marker row (``transform_change_events`` keeps
+        it): it is counted by the write's Observation, recorded in
+        ``invalidated``, and filtered out before the write, so it is never
+        published. An invalidate is always the last token of its collection,
+        so numbering before the filter leaves publishable ``seq_in_epoch``
+        values unchanged. An epoch with nothing publishable writes an empty
+        partition."""
         if self.order_within_key:
             if "document_key" not in batch.columns:
                 raise ValueError(
@@ -75,10 +95,6 @@ class JetStreamLikeSink:
             # order; different documents write concurrently. No coalesce —
             # the epoch write parallelizes across all partitions.
             w = Window.partitionBy("document_key").orderBy("msg_id")
-            ordered = batch.withColumn(
-                "seq_in_epoch", F.row_number().over(w)
-            ).withColumn("epoch", F.lit(int(epoch_id)))
-            writer = ordered
         else:
             # Per-collection total order within the epoch: sort by resume
             # token (the reference's order is token order, client.go:217-257)
@@ -87,32 +103,28 @@ class JetStreamLikeSink:
             # the price of a total order, exactly like the reference's
             # single-threaded loop.
             w = Window.partitionBy().orderBy("msg_id")
-            ordered = batch.withColumn(
-                "seq_in_epoch", F.row_number().over(w)
-            ).withColumn("epoch", F.lit(int(epoch_id)))
-            writer = ordered.coalesce(1)
-        # Per-subject message counts for the NATS metrics ride the WRITE job
-        # itself via Observation (no extra Spark job per epoch). Subjects are
-        # enumerable — `<STREAM>.<operationType>` over the four publishable
-        # op types — so the observation is a row of conditional counts.
-        observation = None
-        op_subjects: list[str] = []
-        if self.metrics is not None:
-            from pyspark.sql import Observation
-
-            op_subjects = [
-                f"{self.stream_name}.{op}"
-                for op in ("insert", "update", "replace", "delete")
-            ]
-            observation = Observation()
-            writer = writer.observe(
-                observation,
-                *[
-                    F.count_if(F.col("subject") == s).alias(f"n_{i}")
-                    for i, s in enumerate(op_subjects)
-                ],
-                F.count(F.lit(1)).alias("n_total"),
-            )
+        ordered = batch.withColumn(
+            "seq_in_epoch", F.row_number().over(w)
+        ).withColumn("epoch", F.lit(int(epoch_id)))
+        # Per-subject counts (NATS metrics) and the invalidate count ride the
+        # WRITE job itself via Observation, so the epoch is one scan. It sits
+        # after the window's shuffle: one attached before it is dropped by AQE
+        # when the epoch has no publishable rows. Subjects are enumerable —
+        # `<STREAM>.<operationType>` over the four publishable op types.
+        observation = Observation()
+        writer = ordered.observe(
+            observation,
+            *[
+                F.count_if(F.col("subject") == s).alias(f"n_{i}")
+                for i, s in enumerate(self._op_subjects)
+            ],
+            F.count_if(F.col("subject") == self._invalidate_subject).alias(
+                "n_invalidate"
+            ),
+            F.count(F.lit(1)).alias("n_total"),
+        ).filter(self._publishable)
+        if not self.order_within_key:
+            writer = writer.coalesce(1)
         t0 = time.perf_counter()
         try:
             # Epoch-keyed overwrite = replay-safe (idempotent) publish.
@@ -126,35 +138,40 @@ class JetStreamLikeSink:
                 # the observation never materialized — fall back to counting
                 # the failed batch directly so failure counters stay labeled
                 # (rare path; one extra job only on publish failure)
+                failed = batch.filter(self._publishable)
                 for r in (
-                    batch.groupBy("subject").agg(F.count(F.lit(1)).alias("n")).collect()
+                    failed.groupBy("subject").agg(F.count(F.lit(1)).alias("n")).collect()
                 ):
                     self.metrics.inc(
                         "nats_messages_failed_total", {"subject": r["subject"]}, r["n"]
                     )
             raise
-        if self.metrics is not None:
-            elapsed = time.perf_counter() - t0
-            got = observation.get  # blocks until the write's listener fires
-            counted = 0
-            for i, subject in enumerate(op_subjects):
-                n = int(got[f"n_{i}"])
-                counted += n
-                if n:
-                    self.metrics.inc(
-                        "nats_messages_published_total", {"subject": subject}, n
-                    )
-                    self.metrics.observe(
-                        "nats_message_duration_seconds", {"subject": subject}, elapsed
-                    )
-            other = int(got["n_total"]) - counted
-            if other:
+        elapsed = time.perf_counter() - t0
+        got = observation.get  # blocks until the write's listener fires
+        n_invalidate = int(got["n_invalidate"])
+        if n_invalidate:
+            self.invalidated = True
+        if self.metrics is None:
+            return
+        counted = n_invalidate
+        for i, subject in enumerate(self._op_subjects):
+            n = int(got[f"n_{i}"])
+            counted += n
+            if n:
                 self.metrics.inc(
-                    "nats_messages_published_total", {"subject": "other"}, other
+                    "nats_messages_published_total", {"subject": subject}, n
                 )
                 self.metrics.observe(
-                    "nats_message_duration_seconds", {"subject": "other"}, elapsed
+                    "nats_message_duration_seconds", {"subject": subject}, elapsed
                 )
+        other = int(got["n_total"]) - counted
+        if other:
+            self.metrics.inc(
+                "nats_messages_published_total", {"subject": "other"}, other
+            )
+            self.metrics.observe(
+                "nats_message_duration_seconds", {"subject": "other"}, elapsed
+            )
 
     # Consumer view — dedup by msg id. Default mirrors durable storage:
     # the window is UNBOUNDED (strictly stronger than JetStream, which
@@ -223,7 +240,6 @@ class JetStreamLikeSink:
         return df.join(kept, ["msg_id", "epoch", "seq_in_epoch"], "left_semi")
 
     def message_count(self, deduped: bool = True) -> int:
-        try:
-            return self.read_messages(deduped).count()
-        except Exception:
+        if not glob.glob(os.path.join(glob.escape(self.messages_dir), "epoch=*")):
             return 0  # no epochs written yet
+        return self.read_messages(deduped).count()

@@ -26,7 +26,6 @@ from mongodb_nats_connector_spark.sources.change_events import (
 )
 from mongodb_nats_connector_spark.streaming.pipeline import (
     Connector,
-    detect_invalidate,
     transform_change_events,
 )
 
@@ -241,16 +240,33 @@ def test_order_within_key_mode_exactly_once_per_key_order(spark, tmp_path):
     assert len(per_key) == 20
 
 
+def _prometheus_values(text: str) -> dict[str, float]:
+    """``name{labels}`` -> value for every sample line of an exposition."""
+    out = {}
+    for line in text.splitlines():
+        key, _, value = line.rpartition(" ")
+        out[key] = float(value)
+    return out
+
+
 def test_nats_publish_metrics_exposed(spark, tmp_path):
     """The reference's NATS exposition (prometheus.go NatsRegisterer):
-    per-subject published counters + duration histogram come from the sink."""
-    from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
+    per-subject published counters + duration histogram come from the sink,
+    and the listener counts every change event exactly once, even though the
+    feed carries replayed tokens and the drop/rename/invalidate tail. The
+    invalidate marker is never counted as published or failed."""
+    import time
+
+    from mongodb_nats_connector_spark.streaming.observability import (
+        ConnectorMetricsListener,
+        MetricsRegistry,
+    )
+    from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
 
     registry = MetricsRegistry()
+    listener = ConnectorMetricsListener(registry)
     feed = str(tmp_path / "feed")
-    write_change_event_feed(
-        spark, feed, n_docs=3, with_noise_tail=False, with_duplicates=False
-    )
+    n_rows = write_change_event_feed(spark, feed, n_docs=3)  # 12 + 3 replays + 3 noise
     cfg = ConnectorConfig(
         collections=[CollectionConfig(db_name="test-connector-db", coll_name="coll1")]
     )
@@ -258,24 +274,188 @@ def test_nats_publish_metrics_exposed(spark, tmp_path):
         spark, cfg, {"test-connector-db.coll1": feed},
         sink_root=str(tmp_path / "sink"), metrics=registry,
     )
-    conn.start()
-    conn.process_all_available()
-    conn.stop()
+    spark.streams.addListener(listener)
+    try:
+        conn.start()
+        conn.process_all_available()
+        query = conn.handles[0].query
+        epochs = sum(1 for p in query.recentProgress if p.numInputRows)
+        assert epochs >= 1
+        # the listener bus is asynchronous: wait until it has seen every epoch
+        seen_key = (
+            "connector_change_event_processing_duration_seconds_count"
+            '{collection="cdc-COLL1"}'
+        )
+        deadline = time.monotonic() + 30
+        while time.monotonic() < deadline:
+            seen = _prometheus_values(registry.render_prometheus()).get(seen_key, 0)
+            if seen >= epochs:
+                break
+            time.sleep(0.1)
+        assert seen == epochs, f"listener saw {seen} of {epochs} epochs"
+    finally:
+        conn.stop()
+        spark.streams.removeListener(listener)
 
-    text = registry.render_prometheus()
-    for op in ("insert", "update", "replace", "delete"):
-        assert f'nats_messages_published_total{{subject="COLL1.{op}"}} 3' in text, text
-    assert 'nats_message_duration_seconds_bucket{subject="COLL1.insert",le="+Inf"}' in text
-    assert "nats_messages_failed_total" not in text  # nothing failed
+    values = _prometheus_values(registry.render_prometheus())
+    assert values['connector_events_total{collection="cdc-COLL1"}'] == n_rows
+    # at-least-once underneath: the three replayed tokens (insert, update,
+    # replace of doc 0) are published again and counted
+    expected = {"insert": 4, "update": 4, "replace": 4, "delete": 3}
+    for op, n in expected.items():
+        assert values[f'nats_messages_published_total{{subject="COLL1.{op}"}}'] == n
+    published = {k for k in values if k.startswith("nats_messages_published_total")}
+    assert len(published) == 4, published  # no COLL1.invalidate, no "other"
+    assert 'nats_message_duration_seconds_bucket{subject="COLL1.insert",le="+Inf"}' in values
+    assert not any(k.startswith("nats_messages_failed_total") for k in values)
+
+    # failure path: the write fails mid-job, the sink falls back to counting
+    # the batch directly — still without the invalidate marker
+    failing_sink = JetStreamLikeSink(
+        spark, str(tmp_path / "failing"), "COLL1", metrics=registry
+    )
+    failing_sink.add_stream()
+    failing = transform_change_events(
+        generate_change_events(spark, n_docs=2, with_duplicates=False), "COLL1"
+    ).withColumn(
+        "data",
+        F.when(F.col("subject").isNotNull(), F.raise_error(F.lit("injected failure")))
+        .otherwise(F.col("data")),
+    )
+    assert failing.filter(F.col("subject") == "COLL1.invalidate").count() == 1
+    with pytest.raises(Exception, match="injected failure"):
+        failing_sink.publish_batch(failing, 0)
+    values = _prometheus_values(registry.render_prometheus())
+    failed = {k: v for k, v in values.items() if k.startswith("nats_messages_failed_total")}
+    assert failed == {
+        f'nats_messages_failed_total{{subject="COLL1.{op}"}}': 2.0
+        for op in ("insert", "update", "replace", "delete")
+    }
 
 
-def test_invalidate_detected(spark):
-    """O6: invalidate markers are detectable for stream termination
-    (client.go:232-235)."""
-    ev = generate_change_events(spark, n_docs=2, with_noise_tail=True)
-    inv = detect_invalidate(ev)
-    assert inv.count() == 1
-    assert inv.first().operation_type == "invalidate"
+def test_source_pause_resume_zero_loss(spark, tmp_path):
+    """restart_mongo_test.go:30-38 analogue on the file feed: the source goes
+    quiet (database down produces nothing), the connector query STAYS
+    RUNNING through idle triggers that publish nothing, the source resumes
+    with a new file, and every event is delivered exactly once in token
+    order — zero loss across the outage, no restart needed."""
+    import time
+
+    conn = _connector(
+        spark, tmp_path, n_docs=10, with_noise_tail=False, with_duplicates=False
+    )
+    (handle,) = conn.start()
+    try:
+        conn.process_all_available()
+        assert handle.sink.message_count() == 40
+        # outage: the feed produces nothing; the trigger loop keeps polling
+        time.sleep(1.0)
+        conn.process_all_available()
+        assert handle.query.isActive
+        assert handle.sink.message_count() == 40
+        # recovery: docs 10..24 arrive as a later file (tokens 40..99)
+        generate_change_events(
+            spark, n_docs=25, with_noise_tail=False, with_duplicates=False
+        ).filter(F.col("document_key_id") >= F.lit(f"{10:024x}")).orderBy(
+            "_id_data"
+        ).coalesce(1).write.mode("append").parquet(str(tmp_path / "feed"))
+        conn.process_all_available()
+        assert handle.query.isActive
+    finally:
+        conn.stop()
+    ids = [
+        r.msg_id
+        for r in handle.sink.read_messages().orderBy("epoch", "seq_in_epoch").collect()
+    ]
+    assert len(ids) == 100 and len(set(ids)) == 100
+    assert ids == sorted(ids), "order broken across the outage"
+
+
+@pytest.mark.parametrize("order_within_key", [False, True])
+def test_noise_only_and_invalidate_only_epochs(spark, tmp_path, order_within_key):
+    """Lifecycle edges by value, one epoch per file: an epoch of only
+    drop/rename events publishes nothing and leaves an empty, readable
+    partition; a later epoch publishes normally; an epoch that holds only the
+    invalidate marker publishes nothing and stops the pipeline gracefully."""
+    import time
+
+    from mongodb_nats_connector_spark.functions.extjson import CHANGE_EVENT_SCHEMA
+    from mongodb_nats_connector_spark.sources.change_events import (
+        generate_change_event_rows,
+    )
+
+    rows = generate_change_event_rows(n_docs=2, with_duplicates=False)
+    publishable, (drop, rename, invalidate) = rows[:-3], rows[-3:]
+    feed = str(tmp_path / "feed")
+
+    def append(batch):
+        spark.createDataFrame(batch, CHANGE_EVENT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(feed)
+
+    append([drop, rename])
+    cfg = ConnectorConfig(
+        collections=[CollectionConfig(db_name="test-connector-db", coll_name="coll1")]
+    )
+    conn = Connector(
+        spark, cfg, {"test-connector-db.coll1": feed},
+        sink_root=str(tmp_path / "sink"), order_within_key=order_within_key,
+    )
+    (handle,) = conn.start()
+    try:
+        conn.process_all_available()
+        assert handle.query.isActive and not handle.invalidated
+        assert handle.sink.read_messages().count() == 0
+        assert handle.sink.message_count() == 0
+
+        append(publishable)
+        conn.process_all_available()
+        assert handle.query.isActive and not handle.invalidated
+        assert handle.sink.message_count() == 8
+
+        append([invalidate])
+        conn.process_all_available()
+        deadline = time.monotonic() + 30
+        while time.monotonic() < deadline and handle.query.isActive:
+            time.sleep(0.2)
+        assert handle.invalidated
+        assert not handle.query.isActive
+        assert handle.query.exception() is None
+    finally:
+        conn.stop()
+    per_epoch = {
+        r["epoch"]: r["count"]
+        for r in handle.sink.read_messages(deduped=False).groupBy("epoch").count().collect()
+    }
+    assert per_epoch == {1: 8}
+    assert conn.health()["components"][0]["status"] == "COMPLETED"
+
+
+def test_message_count_raises_on_corrupt_stream(spark, tmp_path):
+    """``message_count`` is 0 only while no epoch exists; a damaged stream
+    raises instead of reading as empty."""
+    import glob
+    import os
+
+    from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
+
+    sink = JetStreamLikeSink(spark, str(tmp_path / "stream"), "COLL1")
+    sink.add_stream()
+    assert sink.message_count() == 0
+    sink.publish_batch(
+        transform_change_events(
+            generate_change_events(spark, n_docs=2, with_duplicates=False), "COLL1"
+        ),
+        0,
+    )
+    assert sink.message_count() == 8
+    files = glob.glob(os.path.join(sink.messages_dir, "epoch=0", "*.parquet"))
+    assert files
+    for path in files:
+        with open(path, "r+b") as f:
+            f.truncate(os.path.getsize(path) // 2)
+    with pytest.raises(Exception):
+        sink.message_count()
 
 
 def test_extjson_envelope_roundtrip(spark):
