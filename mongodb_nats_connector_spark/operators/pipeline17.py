@@ -1,16 +1,10 @@
-"""Round-12 bank, second tranche: classifier-evaluation completions
+"""Classifier-evaluation completions
 (PR-AUC, KS separation, calibration error), variance-homogeneity and
 agreement statistics, rank-concordance and records/trend tests,
 change-point homogeneity (Buishand/SNHT/KPSS), inequality measures
 (Atkinson, Palma, Lorenz asymmetry), spatial/graph autocorrelation
 (Moran/Geary, rich-club), intermittent-demand TSB, restricted mean
 survival time, and cross-document n-gram novelty.
-
-This module is imported by ``registry._load_deferred()`` (NOT
-``_load_all``): the round-11 driver window is exactly full, so these
-queries stay out of the driver-facing registry until the round-12 window
-opens — while the registry-wide lint and parity tests load the bank
-explicitly and enforce the full discipline from day one.
 
 Reference provenance: like pipeline7-16, none of these operators exist in
 the reference's Go core (a MongoDB change-stream -> NATS connector,

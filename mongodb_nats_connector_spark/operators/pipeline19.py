@@ -1,8 +1,6 @@
-"""Round-13 bank (LIVE since round 13): staged behind
-``registry._load_deferred()`` through round 12, promoted into
-``_load_all`` when the round-13 driver window opened — exactly one full
-50-query window, three-SF bit-exact and identity-pinned
-(tests/test_round19.py) before banking.
+"""Analytics operators loaded by ``registry._load_all``; each query is
+three-SF bit-exact against its oracle and identity-pinned in
+tests/test_round19.py.
 
 Reference provenance: like pipeline7-18, none of these operators exist in
 the reference's Go core (a MongoDB change-stream -> NATS connector,

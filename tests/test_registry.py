@@ -8,6 +8,7 @@ full hard verification with no hand-maintained lists.
 
 from __future__ import annotations
 
+import ast
 import json
 from pathlib import Path
 
@@ -119,3 +120,22 @@ def test_duplicate_registration_rejected():
         @registry.register("q1_pricing_summary")
         def dup(spark, sf_dir):  # pragma: no cover
             raise AssertionError
+
+
+def test_every_register_site_is_reachable():
+    """``_load_all()`` is the only load path: a query registered in a module
+    it does not import is dead code no entry point can reach."""
+    ops = Path(registry.__file__).resolve().parent / "operators"
+    sites = set()
+    for path in ops.glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.FunctionDef):
+                sites.update(
+                    deco.args[0].value
+                    for deco in node.decorator_list
+                    if isinstance(deco, ast.Call)
+                    and isinstance(deco.func, ast.Name)
+                    and deco.func.id == "register"
+                )
+    registry._load_all()
+    assert set(registry._REGISTRY) == sites

@@ -10,8 +10,9 @@ reads ~1.0 because queries are overhead-bound (PERF_r14 scaling block).
     SPARK_GRAFT_CPUS=32 python tools/sf1_scaling.py
     SPARK_GRAFT_CPUS=8  python tools/sf1_scaling.py
 
-The replica is built once under spark-warehouse/scaleprobe_sf1 (reused if
-present; delete the directory to rebuild)."""
+The replica is built once under spark-warehouse/scaleprobe_sf1 and reused
+only when its _COMPLETE marker is present (a build that died part-way is
+rebuilt); delete the directory to force a rebuild."""
 
 from __future__ import annotations
 
@@ -37,6 +38,7 @@ QUERIES = [
 
 REPS = 10
 N_RUNS = 3
+COMPLETE_MARKER = "_COMPLETE"
 
 
 def _steal() -> float:
@@ -90,6 +92,10 @@ def build_replica(spark, rep_dir: str) -> None:
                 df = df.withColumn(col, F.col(col) + F.col("rep") * shifts[space])
             df = df.drop("rep").repartition(32)
         df.write.mode("overwrite").parquet(os.path.join(rep_dir, f"{name}.parquet"))
+    # written after the last table: lineitem is written first, so its
+    # presence alone does not prove the replica is whole
+    with open(os.path.join(rep_dir, COMPLETE_MARKER), "w"):
+        pass
 
 
 def main() -> None:
@@ -106,7 +112,7 @@ def main() -> None:
         "spark-warehouse",
         "scaleprobe_sf1",
     )
-    if not os.path.isdir(os.path.join(rep_dir, "lineitem.parquet")):
+    if not os.path.isfile(os.path.join(rep_dir, COMPLETE_MARKER)):
         build_replica(spark, rep_dir)
 
     # same warmup as bench.py
