@@ -129,9 +129,11 @@ def main(argv: list[str] | None = None) -> int:
             while not stopping and any(h.query.isActive for h in connector.handles):
                 connector.await_any_termination(timeout=1.0)
     finally:
-        connector.stop()
-        server.stop()
-        spark.streams.removeListener(listener)
+        try:
+            connector.stop()
+        finally:
+            server.stop()
+            spark.streams.removeListener(listener)
     return 0
 
 

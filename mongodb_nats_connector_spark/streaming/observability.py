@@ -16,6 +16,7 @@ import threading
 from collections import defaultdict
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 
@@ -79,6 +80,14 @@ class MetricsRegistry:
                 out.append(f"{name}_sum{self._fmt_labels(labels)} {s:.6f}")
                 out.append(f"{name}_count{self._fmt_labels(labels)} {c}")
         return "\n".join(out) + "\n"
+
+
+def drain_listener_bus(spark: SparkSession) -> None:
+    """Block until Spark's listener bus has delivered every posted event,
+    including streaming progress to ``ConnectorMetricsListener``. Listener
+    callbacks run on the bus's own thread, so they can lag the query that
+    posted the events; after 30 s the JVM's ``TimeoutException`` raises."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
 
 
 class ConnectorMetricsListener(StreamingQueryListener):

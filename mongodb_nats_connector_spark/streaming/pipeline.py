@@ -10,15 +10,20 @@ Reference dataflow (SURVEY.md §2.1, internal/mongo/client.go:177-266):
 
 Spark mapping: Structured Streaming owns O1/O2/O3/O10 via the checkpoint
 (offset + commit logs — the whole resume-token subsystem disappears), O4-O8
-are column expressions, and O9 is a `foreachBatch` idempotent sink
-(streaming/sink.py). Delivery semantics match the reference's crash matrix
-(README.md:118-127): at-least-once publish + msg-id dedup = effectively once.
+are column expressions on the stream definition itself, planned once per
+query rather than rebuilt per epoch, and O9 is a `foreachBatch` idempotent
+sink (streaming/sink.py). Delivery semantics match the reference's crash
+matrix (README.md:118-127): at-least-once publish + msg-id dedup =
+effectively once.
 
-Each epoch is ONE Spark write. O6 rides it: the transform keeps the
-invalidate marker as a ``<STREAM>.invalidate`` row, the sink's write
-Observation counts it and filters it out before the write, and the batch
-handler reads ``sink.invalidated`` afterwards to stop that pipeline's query
-once the epoch has committed. There is no separate scan for the marker.
+Each epoch is one Spark write. In the total-order mode that is one job of
+one stage and one task: read, serialize, sort, number, count, write. (The
+per-key mode keeps its window shuffle, which AQE may run as a job of its
+own.) O6 rides the write: the transform keeps the invalidate marker as a
+``<STREAM>.invalidate`` row, the sink's write Observation counts it and
+filters it out before the write, and the batch handler reads
+``sink.invalidated`` afterwards to stop that pipeline's query once the epoch
+has committed. There is no separate scan for the marker.
 
 Ordering: the reference is strictly ordered per collection because its loop
 is single-threaded (client.go:217-257). Here each micro-batch is sorted by
@@ -33,6 +38,7 @@ import threading
 import time
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -45,6 +51,7 @@ from mongodb_nats_connector_spark.config import (
 )
 from mongodb_nats_connector_spark.functions.extjson import envelope_to_extjson
 from mongodb_nats_connector_spark.sources.change_events import read_change_event_stream
+from mongodb_nats_connector_spark.streaming.observability import drain_listener_bus
 from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
 
 
@@ -101,21 +108,37 @@ def _stop_after_epoch(query: StreamingQuery, timeout: float = 30.0) -> None:
     Waiting for the trigger to go idle lets the final publishable events of
     that epoch commit; if the wait races the next trigger, the epoch-keyed
     idempotent sink makes the replay harmless.
+
+    A terminated, failed or concurrently stopping query answers
+    ``isActive``, ``status`` and ``stop()`` without raising; ``stop()`` on a
+    query whose SparkContext has stopped raises a ``Py4JJavaError``. The
+    ``except`` takes every error from the JVM side (``Py4JError`` and its
+    ``Py4JJavaError`` subclass); anything else raises out of the thread. In
+    both cases a query left running is reported DOWN by
+    ``Connector.health()`` once this thread has ended.
     """
     deadline = time.monotonic() + timeout
-    while time.monotonic() < deadline:
-        try:
+    try:
+        while time.monotonic() < deadline:
             if not query.isActive:
                 return
             if not query.status.get("isTriggerActive", False):
                 break
-        except Exception:
-            break
-        time.sleep(0.1)
-    try:
+            time.sleep(0.1)
         query.stop()
-    except Exception:
-        pass  # already terminated
+    except Py4JError:
+        pass
+
+
+def _stop_in_background(lifecycle: dict) -> None:
+    """Run ``_stop_after_epoch`` on a daemon thread, kept in ``lifecycle``
+    so ``Connector.health()`` can tell a stop that failed from one still
+    waiting."""
+    stopper = threading.Thread(
+        target=_stop_after_epoch, args=(lifecycle["query"],), daemon=True
+    )
+    lifecycle["stopper"] = stopper
+    stopper.start()
 
 
 class Connector:
@@ -146,28 +169,27 @@ class Connector:
         self.order_within_key = order_within_key
         self.metrics = metrics  # optional MetricsRegistry for NATS counters
         self.handles: list[PipelineHandle] = []
+        self._drain_at_stop = False
 
-    def _batch_handler(self, sink: JetStreamLikeSink, stream_name: str, lifecycle: dict):
-        """foreachBatch body: publish the batch's publishable events, then —
-        O6 — if the sink's write saw an invalidate marker, stop the query
-        after the epoch (client.go:232-235: the reference stops resuming the
-        dropped collection; siblings keep running)."""
+    @staticmethod
+    def _batch_handler(sink: JetStreamLikeSink, lifecycle: dict):
+        """foreachBatch body: publish the epoch, then — O6 — if the sink's
+        write saw an invalidate marker, stop the query after the epoch
+        (client.go:232-235: the reference stops resuming the dropped
+        collection; siblings keep running). The batch arrives already
+        transformed: ``transform_change_events`` sits on the stream
+        definition, planned once per query, so an epoch builds no plan in
+        Python beyond the sink's own select."""
 
         def handle(batch: DataFrame, epoch_id: int) -> None:
-            out = transform_change_events(
-                batch, stream_name, keep_document_key=self.order_within_key
-            )
-            sink.publish_batch(out, epoch_id)
-            if sink.invalidated:
-                query = lifecycle.get("query")
-                if query is not None:
-                    threading.Thread(
-                        target=_stop_after_epoch, args=(query,), daemon=True
-                    ).start()
+            sink.publish_batch(batch, epoch_id)
+            if sink.invalidated and "query" in lifecycle:
+                _stop_in_background(lifecycle)
 
         return handle
 
     def start(self) -> list[PipelineHandle]:
+        self._drain_at_stop = True
         for coll in self.config.collections:
             key = f"{coll.db_name}.{coll.coll_name}"
             if key not in self.source_paths:
@@ -180,22 +202,24 @@ class Connector:
                 metrics=self.metrics,
             )
             sink.add_stream()  # DDL bootstrap, idempotent (O13)
-            events = read_change_event_stream(self.spark, self.source_paths[key])
+            events = transform_change_events(
+                read_change_event_stream(self.spark, self.source_paths[key]),
+                coll.stream_name,
+                keep_document_key=self.order_within_key,
+            )
             checkpoint = f"{self.sink_root}/checkpoints/{coll.checkpoint_name}"
             lifecycle: dict = {}
             query = (
                 events.writeStream.outputMode("append")
                 .option("checkpointLocation", checkpoint)
-                .foreachBatch(self._batch_handler(sink, coll.stream_name, lifecycle))
+                .foreachBatch(self._batch_handler(sink, lifecycle))
                 .queryName(f"cdc-{coll.stream_name}")
                 .start()
             )
             lifecycle["query"] = query
             if sink.invalidated:
                 # the first trigger raced us and already saw the invalidate
-                threading.Thread(
-                    target=_stop_after_epoch, args=(query,), daemon=True
-                ).start()
+                _stop_in_background(lifecycle)
             self.handles.append(PipelineHandle(coll, query, sink, lifecycle))
         return self.handles
 
@@ -222,20 +246,33 @@ class Connector:
         return terminated
 
     def stop(self) -> None:
+        """Stop every pipeline. The first call after ``start()`` then waits
+        until the listener bus has delivered their last progress events, so
+        ``/metrics`` counts the final epochs before the caller shuts the
+        server down; it raises the JVM's ``TimeoutException`` if the bus has
+        not drained in 30 s. Later calls (``__main__`` stops again after its
+        signal handler did) only stop."""
         for h in self.handles:
             if h.query.isActive:
                 h.query.stop()
+        if self._drain_at_stop:
+            self._drain_at_stop = False
+            drain_listener_bus(self.spark)
 
     # -- observability (O15): /healthz response shape,
     #    internal/server/health.go:31-45 --
     def health(self) -> dict:
         components = []
         for h in self.handles:
+            stopper = h.lifecycle.get("stopper")
             if h.invalidated and not h.query.isActive:
                 # graceful completion after a collection drop/rename: the
                 # reference's watch loop returns nil on invalidate and the
                 # connector keeps serving (client.go:232-235, drop_test.go)
                 status = "COMPLETED"
+            elif stopper is not None and not stopper.is_alive():
+                # the invalidate's stop has ended but left the query running
+                status = "DOWN"
             elif h.query.isActive and h.query.exception() is None:
                 status = "UP"
             else:

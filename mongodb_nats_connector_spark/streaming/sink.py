@@ -66,7 +66,33 @@ class JetStreamLikeSink:
             f"{stream_name}.{op}" for op in PUBLISHABLE_OPERATION_TYPES
         ]
         self._invalidate_subject = f"{stream_name}.{INVALIDATE_OPERATION_TYPE}"
+        # The per-epoch plan is the same every epoch, so its Columns are built
+        # once here; publish_batch only attaches them to the batch.
         self._publishable = ~F.col("subject").eqNullSafe(self._invalidate_subject)
+        if order_within_key:
+            # Per-key order: rows for one document are numbered in token
+            # order; different documents write concurrently.
+            w = Window.partitionBy("document_key").orderBy("msg_id")
+        else:
+            # Per-collection total order within the epoch: sort by resume
+            # token (the reference's order is token order, client.go:217-257)
+            # and tag each row with its in-epoch sequence so consumers can
+            # verify order.
+            w = Window.partitionBy().orderBy("msg_id")
+        self._seq_in_epoch = F.row_number().over(w).alias("seq_in_epoch")
+        # Per-subject counts (NATS metrics), the invalidate count and the
+        # total. Subjects are enumerable — `<STREAM>.<operationType>` over
+        # the four publishable op types.
+        self._observed = [
+            *[
+                F.count_if(F.col("subject") == s).alias(f"n_{i}")
+                for i, s in enumerate(self._op_subjects)
+            ],
+            F.count_if(F.col("subject") == self._invalidate_subject).alias(
+                "n_invalidate"
+            ),
+            F.count(F.lit(1)).alias("n_total"),
+        ]
         # set once an epoch carried the invalidate marker (O6): the stream
         # has ended and its pipeline should stop after that epoch
         self.invalidated = False
@@ -77,7 +103,8 @@ class JetStreamLikeSink:
 
     # O9 — publish with idempotency key; called per epoch by foreachBatch
     def publish_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        """Write the epoch as ONE Spark job. ``batch`` may still carry the
+        """Write the epoch as one Spark write: one job, one stage and one
+        task in the total-order mode. ``batch`` may still carry the
         ``<STREAM>.invalidate`` marker row (``transform_change_events`` keeps
         it): it is counted by the write's Observation, recorded in
         ``invalidated``, and filtered out before the write, so it is never
@@ -91,40 +118,25 @@ class JetStreamLikeSink:
                     "order_within_key sink requires a document_key column "
                     "(transform_change_events(..., keep_document_key=True))"
                 )
-            # Per-key order: rows for one document are numbered in token
-            # order; different documents write concurrently. No coalesce —
-            # the epoch write parallelizes across all partitions.
-            w = Window.partitionBy("document_key").orderBy("msg_id")
         else:
-            # Per-collection total order within the epoch: sort by resume
-            # token (the reference's order is token order, client.go:217-257)
-            # and tag each row with its in-epoch sequence so consumers can
-            # verify order. The global window forces one task per epoch —
-            # the price of a total order, exactly like the reference's
-            # single-threaded loop.
-            w = Window.partitionBy().orderBy("msg_id")
-        ordered = batch.withColumn(
-            "seq_in_epoch", F.row_number().over(w)
-        ).withColumn("epoch", F.lit(int(epoch_id)))
-        # Per-subject counts (NATS metrics) and the invalidate count ride the
-        # WRITE job itself via Observation, so the epoch is one scan. It sits
-        # after the window's shuffle: one attached before it is dropped by AQE
-        # when the epoch has no publishable rows. Subjects are enumerable —
-        # `<STREAM>.<operationType>` over the four publishable op types.
+            # The global window needs every row in one partition. Coalescing
+            # the batch first meets that without an exchange, so the epoch
+            # is one stage, one task and one job — the price of a total
+            # order, exactly like the reference's single-threaded loop.
+            # Keyed mode keeps the window's partitionBy shuffle and writes
+            # with full parallelism.
+            batch = batch.coalesce(1)
+        # The counts ride the WRITE job itself via Observation, so the epoch
+        # is one scan. The Observation sits after the window. In keyed mode
+        # that puts it after the shuffle: one attached before it is dropped
+        # by AQE when the epoch has no publishable rows. The total-order plan
+        # has no exchange, so AQE does not re-plan it.
         observation = Observation()
-        writer = ordered.observe(
-            observation,
-            *[
-                F.count_if(F.col("subject") == s).alias(f"n_{i}")
-                for i, s in enumerate(self._op_subjects)
-            ],
-            F.count_if(F.col("subject") == self._invalidate_subject).alias(
-                "n_invalidate"
-            ),
-            F.count(F.lit(1)).alias("n_total"),
-        ).filter(self._publishable)
-        if not self.order_within_key:
-            writer = writer.coalesce(1)
+        writer = (
+            batch.select("*", self._seq_in_epoch, F.lit(int(epoch_id)).alias("epoch"))
+            .observe(observation, *self._observed)
+            .filter(self._publishable)
+        )
         t0 = time.perf_counter()
         try:
             # Epoch-keyed overwrite = replay-safe (idempotent) publish.

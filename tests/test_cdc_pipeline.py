@@ -9,6 +9,7 @@ Scenario sources (reference files under /root/reference/):
 
 from __future__ import annotations
 
+import glob
 import json
 
 import pytest
@@ -331,6 +332,143 @@ def test_nats_publish_metrics_exposed(spark, tmp_path):
         f'nats_messages_failed_total{{subject="COLL1.{op}"}}': 2.0
         for op in ("insert", "update", "replace", "delete")
     }
+
+
+@pytest.mark.parametrize("order_within_key", [False, True])
+def test_one_job_per_epoch_and_final_metrics_at_stop(spark, tmp_path, order_within_key):
+    """An epoch is one Spark write: exactly one job of one task in the
+    total-order mode (the batch is coalesced before the global window, so no
+    exchange), at most two in the per-key mode (AQE may run the key
+    shuffle's map stage as a job of its own). ``stop()`` drains the listener
+    bus: right after it, with no polling, /metrics counts every event, the
+    last epoch's too. The last file ends with the invalidate marker, so the
+    query may already be stopping itself when ``stop()`` runs."""
+    import urllib.request
+
+    from mongodb_nats_connector_spark.functions.extjson import CHANGE_EVENT_SCHEMA
+    from mongodb_nats_connector_spark.sources.change_events import (
+        generate_change_event_rows,
+    )
+    from mongodb_nats_connector_spark.streaming.observability import (
+        ConnectorMetricsListener,
+        MetricsRegistry,
+        ObservabilityServer,
+    )
+
+    rows = generate_change_event_rows(n_docs=12, with_duplicates=False)  # 48 + 3 noise
+    feed = str(tmp_path / "feed")
+    for i in range(0, len(rows), 17):  # three files, one epoch each
+        spark.createDataFrame(rows[i : i + 17], CHANGE_EVENT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(feed)
+    # Split every file into several scan partitions, as a backlog file is,
+    # so the one task per epoch shows the coalesce folding a multi-partition
+    # scan. The query's session is cloned at start(), which takes the conf.
+    split_conf = "spark.sql.files.maxPartitionBytes"
+    saved_split = spark.conf.get(split_conf)
+    spark.conf.set(split_conf, "1024")
+    first_file = sorted(glob.glob(f"{feed}/*.parquet"))[0]
+    assert spark.read.parquet(first_file).rdd.getNumPartitions() > 1
+    registry = MetricsRegistry()
+    listener = ConnectorMetricsListener(registry)
+    cfg = ConnectorConfig(
+        collections=[CollectionConfig(db_name="test-connector-db", coll_name="coll1")]
+    )
+    conn = Connector(
+        spark, cfg, {"test-connector-db.coll1": feed},
+        sink_root=str(tmp_path / "sink"), order_within_key=order_within_key,
+        metrics=registry,
+    )
+    server = ObservabilityServer(health_fn=conn.health, registry=registry)
+    spark.streams.addListener(listener)
+    server.start()
+    try:
+        (handle,) = conn.start()
+        conn.process_all_available()
+        conn.stop()
+        url = f"http://127.0.0.1:{server.port}/metrics"
+        with urllib.request.urlopen(url, timeout=30) as r:
+            values = _prometheus_values(r.read().decode())
+    finally:
+        spark.conf.set(split_conf, saved_split)
+        conn.stop()
+        server.stop()
+        spark.streams.removeListener(listener)
+
+    epochs = {p.batchId for p in handle.query.recentProgress if p.numInputRows}
+    assert len(epochs) == 3
+    # Structured Streaming runs a query's jobs in its run-id job group
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(handle.query.runId))
+    if order_within_key:
+        assert len(epochs) <= len(jobs) <= 2 * len(epochs), sorted(jobs)
+    else:
+        assert len(jobs) == len(epochs), sorted(jobs)
+        tasks = [
+            tracker.getStageInfo(stage).numTasks
+            for job in jobs
+            for stage in tracker.getJobInfo(job).stageIds
+        ]
+        assert tasks == [1] * len(epochs), tasks
+    assert values['connector_events_total{collection="cdc-COLL1"}'] == len(rows)
+    assert handle.sink.message_count() == 48
+
+
+@pytest.mark.filterwarnings("ignore::pytest.PytestUnhandledThreadExceptionWarning")
+def test_failed_invalidate_stop_reports_down():
+    """The invalidate's helper thread takes only errors from the JVM side (a
+    Py4JError, as stop() raises once the SparkContext has stopped); any
+    other error raises out of it. Either way, a query that the stop left
+    running makes health() report the pipeline DOWN, not UP."""
+    from py4j.protocol import Py4JError
+
+    from mongodb_nats_connector_spark.streaming.pipeline import (
+        PipelineHandle,
+        _stop_after_epoch,
+        _stop_in_background,
+    )
+
+    class IdleQuery:
+        status = {"isTriggerActive": False}
+
+        def __init__(self, error=None):
+            self.isActive = True
+            self.error = error
+
+        def stop(self):
+            if self.error is not None:
+                raise self.error
+            self.isActive = False
+
+        def exception(self):
+            return None
+
+    class InvalidatedSink:
+        invalidated = True
+
+    _stop_after_epoch(IdleQuery(Py4JError("RpcEnv already stopped")))
+    with pytest.raises(RuntimeError, match="unexpected"):
+        _stop_after_epoch(IdleQuery(RuntimeError("unexpected")))
+
+    cfg = ConnectorConfig(
+        collections=[CollectionConfig(db_name="test-connector-db", coll_name="coll1")]
+    )
+    conn = Connector(None, cfg, {}, sink_root="unused")
+    for error, status in [
+        (None, "COMPLETED"),
+        (Py4JError("RpcEnv already stopped"), "DOWN"),
+        (RuntimeError("unexpected"), "DOWN"),
+    ]:
+        lifecycle = {"query": IdleQuery(error)}
+        conn.handles = [
+            PipelineHandle(cfg.collections[0], lifecycle["query"], InvalidatedSink(), lifecycle)
+        ]
+        _stop_in_background(lifecycle)
+        lifecycle["stopper"].join(timeout=10)
+        assert not lifecycle["stopper"].is_alive()
+        assert conn.health()["components"] == [
+            {"name": "pipeline-COLL1", "status": status}
+        ], error
 
 
 def test_source_pause_resume_zero_loss(spark, tmp_path):

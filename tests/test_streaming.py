@@ -4,7 +4,6 @@ stateful per-key processing, and observability endpoints."""
 from __future__ import annotations
 
 import json
-import time
 import urllib.request
 import uuid
 
@@ -16,6 +15,7 @@ from mongodb_nats_connector_spark.streaming.observability import (
     ConnectorMetricsListener,
     MetricsRegistry,
     ObservabilityServer,
+    drain_listener_bus,
 )
 from mongodb_nats_connector_spark.streaming.windows import (
     EVENTS_DDL,
@@ -128,6 +128,7 @@ def test_stateful_per_key_offsets(spark, events_feed):
 def test_observability_endpoints(spark, events_feed):
     """O15/O16: /healthz JSON shape and /metrics exposition with the
     reference's metric names (observability_test.go:35-63)."""
+    n_events = spark.read.parquet(events_feed).count()
     registry = MetricsRegistry()
     listener = ConnectorMetricsListener(registry)
     spark.streams.addListener(listener)
@@ -146,12 +147,10 @@ def test_observability_endpoints(spark, events_feed):
         )
         q.processAllAvailable()
         q.stop()
-        # listener callbacks are async; give them a beat
-        deadline = time.time() + 10
-        while time.time() < deadline:
-            if registry.counters:
-                break
-            time.sleep(0.2)
+        # listener callbacks run on the bus thread after the trigger returned
+        drain_listener_bus(spark)
+        batches = sum(1 for p in q.recentProgress if p.numInputRows)
+        assert batches >= 1
         health = json.loads(
             urllib.request.urlopen(f"http://127.0.0.1:{server.port}/healthz").read()
         )
@@ -184,6 +183,14 @@ def test_observability_endpoints(spark, events_feed):
             and 'collection="obs_q"' in ln
         )
         assert cum[-1] == int(count_line.rsplit(" ", 1)[1])
+        # values, not just names: every event once, one observation per
+        # non-empty batch
+        events_line = next(
+            ln for ln in metrics.splitlines()
+            if ln.startswith('connector_events_total{collection="obs_q"}')
+        )
+        assert float(events_line.rsplit(" ", 1)[1]) == n_events
+        assert int(count_line.rsplit(" ", 1)[1]) == batches
         # 404 handling
         try:
             urllib.request.urlopen(f"http://127.0.0.1:{server.port}/nope")
